@@ -3,7 +3,15 @@
 Two paths:
 
 - ``get_spark()`` — build a local session for tests/bench (local[N], AQE on,
-  shuffle partitions ≈ cores).
+  shuffle partitions ≈ cores). Its Python workers start from
+  ``ssidentity_spark.pydaemon`` (``spark.python.daemon.module``), which
+  takes Spark's ``pyspark.zip``, py4j zip and spark-core jar off the
+  workers' ``sys.path`` before it runs Spark's stock daemon. Every Python
+  task otherwise re-reads those archives' directories (150-200 ms a task;
+  an ``applyInPandasWithState`` drain runs one task per state partition
+  per micro-batch). Workers then import the driver's installed pyspark.
+  The engine root goes on the workers' PYTHONPATH so the daemon imports
+  from any working directory.
 - ``tune(spark)`` — idempotent runtime tuning applied to a session we did NOT
   build (the driver hands us one). Only touches runtime-settable SQL confs.
 
@@ -11,7 +19,8 @@ Scale notes (100 TB): everything set here is also correct on a real cluster —
 AQE coalesces the shuffle-partition count upward/downward at runtime, the
 broadcast threshold governs BHJ selection, and the session timezone pin (UTC)
 makes event-time semantics independent of cluster locale. Nothing here assumes
-local mode except ``get_spark``'s master url.
+local mode except ``get_spark``'s master url and its worker PYTHONPATH (a
+driver-side path).
 """
 
 from __future__ import annotations
@@ -20,6 +29,16 @@ import os
 import tempfile
 
 from pyspark.sql import SparkSession
+
+# Static confs for the Python workers of sessions ``get_spark`` builds.
+# Spark merges the executor PYTHONPATH into the workers' own; it does not
+# replace it.
+_WORKER_CONFS: dict[str, str] = {
+    "spark.python.daemon.module": "ssidentity_spark.pydaemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
+}
 
 # Runtime-settable confs applied to any session that runs our queries.
 _RUNTIME_CONFS: dict[str, str] = {
@@ -104,6 +123,7 @@ def get_spark(app_name: str = "ssidentity-spark", cores: int | None = None) -> S
                 tempfile.gettempdir(), f"ssidentity-warehouse-{os.getuid()}"
             ),
         )
+        .config(map=_WORKER_CONFS)
     )
     spark = builder.getOrCreate()
     return tune(spark)
