@@ -7,15 +7,75 @@ cluster ("traveling companions") analysis built from operators/analytics.py
 No graph engine: components are computed with joins + aggregations, the
 standard large-scale relational formulation (HashMin). Each iteration is one
 shuffle on the edge key; iterations stop early when no label changes.
-Label state is (vertex → component), checkpoint-truncated every iteration so
-the plan doesn't grow unboundedly — the practical requirement for running
-this at 100 TB.
+
+Every iterative operator here (and the k-core peel and BFS in
+plans/graph.py) runs its rounds through :func:`fixpoint`: one eager
+materialization per round — a reliable checkpoint when the session has a
+checkpoint dir, a local one otherwise — so the plan never grows round over
+round, the convergence signal rides that same job, and only one round of
+state is held at a time.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Any, Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, Any], DataFrame | None],
+    max_rounds: int,
+    observe: Column | None = None,
+    signal: Any = None,
+    name: str = "fixpoint",
+) -> tuple[DataFrame, int, Any]:
+    """Run ``state = step(state, signal)`` for at most ``max_rounds``
+    rounds — the one loop skeleton under every iterative graph operator.
+
+    Each round materializes the step's frame in one eager job: a reliable
+    ``checkpoint`` when ``sparkContext.getCheckpointDir()`` is set (the
+    round survives losing an executor — set one on a cluster), a
+    ``localCheckpoint`` otherwise. ``observe``, an aggregate Column over
+    the step's frame, is read through an Observation on that same job and
+    handed to the next step as ``signal`` (the first step gets the
+    ``signal`` argument). A step returns None when the signal says its
+    input already is the fixpoint. Once a round is materialized the
+    previous round's blocks are released, so the loop holds one round of
+    state at a time; the caller's initial frame is left alone. Round k's
+    jobs are described ``"<name> round <k>"``; the caller's job
+    description is restored on exit.
+
+    Returns (final state, rounds materialized, last signal).
+    """
+    sc = state.sparkSession.sparkContext
+    reliable = sc.getCheckpointDir() is not None
+    outer = sc.getLocalProperty("spark.job.description")
+    rounds = 0
+    try:
+        for k in range(1, max_rounds + 1):
+            sc.setJobDescription(f"{name} round {k}")
+            nxt = step(state, signal)
+            if nxt is None:
+                break
+            if observe is not None:
+                obs = Observation()
+                nxt = nxt.observe(obs, observe.alias("signal"))
+            if reliable:
+                nxt = nxt.checkpoint(eager=True)
+            else:
+                nxt = nxt.localCheckpoint(eager=True)
+            if observe is not None:
+                signal = obs.get["signal"]
+            if rounds:
+                # no step reads two rounds back: free the previous round
+                state._jdf.queryExecution().analyzed().rdd().unpersist(True)
+            state, rounds = nxt, k
+    finally:
+        sc.setLocalProperty("spark.job.description", outer)
+    return state, rounds, signal
 
 
 def connected_components(
@@ -24,7 +84,6 @@ def connected_components(
     dst: str = "mac_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    truncate: bool = True,
 ) -> DataFrame:
     """HashMin label propagation: every vertex adopts the smallest label in
     its neighborhood until fixpoint. Returns (vertex, component) where
@@ -53,52 +112,39 @@ def connected_components(
         .distinct()
         .withColumn("component", F.col("vertex"))
     )
-    for it in range(max_iter):
+
+    def step(labels: DataFrame, changed: int | None) -> DataFrame | None:
+        if changed == 0:
+            return None
         # candidate labels: own label + min neighbor label
         neighbor_min = (
             sym.join(labels, sym.v == labels.vertex)
             .groupBy(F.col("u").alias("vertex"))
             .agg(F.min("component").alias("nbr_min"))
         )
-        # r13: the round's join already sees old and new label side by
-        # side, so the fixpoint signal rides the state frame as a
-        # boolean instead of a PER-ROUND labels⋈updated join job (the
-        # old check re-joined vertex-sized frames every round purely to
-        # detect change — one full extra job per round, guide §2.4).
-        # After the eager checkpoint the change test is a scan of the
-        # materialized blocks.
-        updated = (
-            labels.join(neighbor_min, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (
-                    F.coalesce("nbr_min", F.col("component"))
-                    < F.col("component")
-                ).alias("chg"),
-            )
+        # the round's join already sees old and new label side by side,
+        # so the change flag rides the state frame and its count is
+        # observed on the round's own materialization job
+        return labels.join(neighbor_min, "vertex", "left").select(
+            "vertex",
+            F.least(
+                F.col("component"), F.coalesce("nbr_min", F.col("component"))
+            ).alias("component"),
+            (F.coalesce("nbr_min", F.col("component")) < F.col("component"))
+            .alias("chg"),
         )
-        # fixpoint check + plan truncation via localCheckpoint.
-        # truncate=False keeps the round's lineage visible — the audit
-        # hook (tools/explain_audit.py) uses it to record the join+agg
-        # structure explain() cannot see behind a checkpoint; production
-        # callers keep the default or plans grow round-over-round
-        if truncate:
-            updated = updated.localCheckpoint(eager=True)
-        changed = updated.filter("chg").limit(1).count()
-        labels = updated.select("vertex", "component")
-        if stats is not None:
-            stats["iterations"] = it + 1
-            # distinguish "fixpoint at exactly max_iter" from "truncated
-            # mid-propagation" — the r6 30× blow-up hit the ceiling and
-            # the raw iteration count alone could not tell which
-            stats["converged"] = changed == 0
-        if changed == 0:
-            break
+
+    labels, rounds, changed = fixpoint(
+        labels, step, max_iter, F.count_if("chg"), name="connected_components"
+    )
     sym.unpersist()
-    return labels
+    if stats is not None:
+        stats["iterations"] = rounds
+        # distinguish "fixpoint at exactly max_iter" from "truncated
+        # mid-propagation" — the r6 30× blow-up hit the ceiling and the
+        # raw iteration count alone could not tell which
+        stats["converged"] = changed == 0
+    return labels.select("vertex", "component")
 
 
 def connected_components_star(
@@ -107,7 +153,6 @@ def connected_components_star(
     dst: str = "mac_b",
     max_iter: int = 50,
     stats: dict | None = None,
-    truncate: bool = True,
 ) -> DataFrame:
     """Connected components via alternating large-star/small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
@@ -125,32 +170,22 @@ def connected_components_star(
     identical to ``connected_components`` (equivalence is pytest-pinned
     on random graphs).
     """
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    # r12 optimization pass 2: `cur` and `vertices` below BOTH eagerly
-    # checkpoint from `raw`, so an unpersisted caller's edge pipeline
-    # (e.g. dedup_cc_clusters' full shingle→minhash→band build) ran
-    # TWICE before the first star round. Materialize the two-column edge
-    # projection once; a caller that already persisted its pairs only
-    # pays one extra edge-list-sized copy. Interleaved A/B at sf0.1
-    # (dedup_cc_clusters, 4 rounds): 8.05 → 7.22 s median, faster every
-    # round, exceptAll-identical output.
-    raw = raw.localCheckpoint(eager=True)
+    # r12 optimization pass 2: materialize the two-column edge projection
+    # once, so an unpersisted caller's edge pipeline (e.g.
+    # dedup_cc_clusters' full shingle→minhash→band build) is not re-run
+    # by each consumer below. Interleaved A/B at sf0.1 (dedup_cc_clusters,
+    # 4 rounds): 8.05 → 7.22 s median, exceptAll-identical output.
+    raw = (
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .localCheckpoint(eager=True)
+    )
     cur = (
         raw.filter(F.col("u") != F.col("v"))
         .select(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # vertex set from the UNFILTERED edges: a vertex whose only edges are
-    # self-loops must still appear (as its own singleton component), or
-    # this function disagrees with connected_components on such graphs
-    vertices = (
-        raw.select(F.col("u").alias("vertex"))
-        .unionByName(raw.select(F.col("v").alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .withColumn("kept", F.lit(True))
     )
 
     def star(e: DataFrame, large: bool) -> DataFrame:
@@ -187,27 +222,47 @@ def connected_components_star(
             .distinct()
         )
 
-    for it in range(max_iter):
-        nxt = star(star(cur, large=True), large=False)
-        # truncate=False is the audit hook (see connected_components)
-        if truncate:
-            nxt = nxt.localCheckpoint(eager=True)
-        # fixpoint: the edge multiset stopped changing
-        done = (
-            nxt.count() == cur.count()
-            and nxt.exceptAll(cur).limit(1).count() == 0
+    def step(state: DataFrame, diff: int | None) -> DataFrame | None:
+        if diff == 0:
+            return None
+        e = state.filter("kept").select("u", "v")
+        nxt = star(star(e, large=True), large=False)
+        # fixpoint test on the round's own job: both edge sets are
+        # distinct, so they are equal iff a full outer join matches every
+        # row. Edges that only the old set has ride along (kept = false)
+        # for one round so the observed count sees them.
+        return (
+            nxt.withColumn("n", F.lit(True))
+            .join(e.withColumn("o", F.lit(True)), ["u", "v"], "full")
+            .select(
+                "u",
+                "v",
+                F.col("n").isNotNull().alias("kept"),
+                (F.col("n").isNull() | F.col("o").isNull()).alias("diff"),
+            )
         )
-        if stats is not None:
-            stats["iterations"] = it + 1
-            stats["converged"] = done
-        cur = nxt
-        if done:
-            break
+
+    cur, rounds, diff = fixpoint(
+        cur, step, max_iter, F.count_if("diff"), name="connected_components_star"
+    )
+    if stats is not None:
+        stats["iterations"] = rounds
+        stats["converged"] = diff == 0
     # converged: a star forest — every non-min vertex carries exactly one
     # (vertex, min) edge; the min-agg is belt-and-braces if max_iter cut
     # convergence short on an adversarial graph
-    comp = cur.groupBy(F.col("u").alias("vertex")).agg(
-        F.min("v").alias("component")
+    comp = (
+        cur.filter("kept")
+        .groupBy(F.col("u").alias("vertex"))
+        .agg(F.min("v").alias("component"))
+    )
+    # vertex set from the UNFILTERED edges: a vertex whose only edges are
+    # self-loops must still appear (as its own singleton component), or
+    # this function disagrees with connected_components on such graphs
+    vertices = (
+        raw.select(F.col("u").alias("vertex"))
+        .unionByName(raw.select(F.col("v").alias("vertex")))
+        .distinct()
     )
     return (
         vertices.join(comp, "vertex", "left")
@@ -223,7 +278,6 @@ def label_propagation(
     dst: str = "dst",
     weight: str = "w",
     iters: int = 4,
-    truncate: bool = True,
     vertices: DataFrame | None = None,
 ) -> DataFrame:
     """COMMUNITY detection by synchronous weighted label propagation
@@ -245,8 +299,7 @@ def label_propagation(
     Relational per round: one join of the symmetrized edge list with the
     label vector on the neighbor key, one (vertex, label) weight
     aggregate, one argmax-by-struct aggregate — two keyed exchanges,
-    checkpoint-truncated lineage (``truncate=False`` is the plan-audit
-    hook, as in connected_components). State is one row per vertex.
+    checkpoint-truncated lineage. State is one row per vertex.
 
     Vertex universe contract (ADVICE r10): by default EDGES DEFINE THE
     VERTEX SET — a vertex with no incident edge has no neighborhood to
@@ -279,7 +332,8 @@ def label_propagation(
         .distinct()
         .withColumn("label", F.col("vertex"))
     )
-    for _ in range(iters):
+
+    def step(labels: DataFrame, _: Any) -> DataFrame:
         support = (
             sym.join(labels, sym.v == labels.vertex)
             .groupBy(F.col("u").alias("vertex"), "label")
@@ -287,15 +341,15 @@ def label_propagation(
         )
         # argmax(s) with min-label tie-break via one struct-max: compare
         # (s, -label) lexicographically — exact on integers
-        labels = support.groupBy("vertex").agg(
+        return support.groupBy("vertex").agg(
             (
                 -F.max(F.struct(F.col("s"), (-F.col("label")).alias("nl")))[
                     "nl"
                 ]
             ).alias("label")
         )
-        if truncate:
-            labels = labels.localCheckpoint(eager=True)
+
+    labels = fixpoint(labels, step, iters, name="label_propagation")[0]
     sym.unpersist()
     if vertices is not None:
         # degree-0 members never appear in `support`, so they are added
@@ -333,9 +387,6 @@ def pagerank(
     iters: int = 6,
     damping: float = 0.85,
     round_dp: int = 6,
-    lineage: str = "local",
-    partitions: int | None = None,
-    checkpoint_every: int = 1,
     broadcast_max_nodes: int = 2_000_000,
 ) -> DataFrame:
     """Weighted PageRank by plain joins + aggregations, fixed ``iters``
@@ -346,70 +397,31 @@ def pagerank(
     natural next analytic after connected components (A3 network tree).
 
     Per round: ONE join of the normalized edge list with the current rank
-    vector on ``src`` (both sides hash-partitioned on the same key, so the
-    cached edge side never re-shuffles), one aggregation on ``dst``, and a
-    scalar dangling-mass aggregate (1-row broadcast, handles sinks
-    exactly). The rank-independent work is hoisted out of the loop:
-    out-weight normalization happens once (``p = w/wout`` cached, not
-    re-joined every round) and the dangling-node set — nodes with no
-    outgoing edges — is a boolean carried on the cached state frame, so
-    the per-round dangling mass is a filter+sum over the rank vector
-    instead of an anti-join (the r6 per-round constant). Rank state is one
-    row per vertex — never materialized on the driver. Fixed iteration
-    count (not convergence-tested) keeps the computation a pure static DAG
-    both engines can replay bit-for-bit up to float summation order; the
-    final ``round(round_dp)`` absorbs that tail.
+    vector and one aggregation on ``dst``. The rank-independent work is
+    hoisted out of the loop: out-weight normalization happens once
+    (``p = w/wout`` cached, not re-joined every round) and the dangling-
+    node set — nodes with no outgoing edges — is a boolean carried on the
+    cached state frame. The dangling mass a round redistributes is the
+    previous round's sum over that flag, observed on the previous round's
+    materialization job (handles sinks exactly, no extra job). Rank state
+    is one row per vertex — never collected. Fixed
+    iteration count (not convergence-tested) keeps the computation a pure
+    static DAG both engines can replay bit-for-bit up to float summation
+    order; the final ``round(round_dp)`` absorbs that tail.
 
-    ``lineage`` picks the round-over-round plan-truncation strategy:
-
-    - ``"local"`` (default): eager ``localCheckpoint`` per round — fastest
-      on a healthy cluster and the right choice for local/bench runs, but
-      the truncated lineage lives in executor block storage, so losing an
-      executor (spot kill, dynamic-allocation scale-in) after round k
-      fails the job: there is no lineage left to recompute the block.
-    - ``"reliable"``: ``DataFrame.checkpoint`` to the session's checkpoint
-      directory (HDFS/object store on a real cluster) — each round's state
-      is durably materialized, an executor loss costs one re-read instead
-      of the job. This is the 1000-executor default; requires
-      ``spark.sparkContext.setCheckpointDir`` (raises a descriptive error
-      otherwise).
-    - ``"persist"``: no truncation — rounds compose lazily into one DAG
-      with each round's state persisted (MEMORY_AND_DISK) for reuse by
-      the two downstream consumers. Full lineage is retained, so recovery
-      is Spark-native recompute; analysis cost grows with ``iters``
-      (measured at sf0.1, 6 rounds: 4.3× slower end-to-end than
-      ``"local"`` — the compounding plan dominates, so this mode is for
-      environments that cannot checkpoint at all, not a performance
-      choice).
-
-    ``partitions`` fixes the loop's shuffle width. Default (None) derives
-    it from the edge count — ~2M edges per partition, floor 1, no upper
-    cap — because checkpoint truncation blinds AQE: each round starts from
-    a ``Scan ExistingRDD`` whose partitioning Catalyst can't see, so the
-    usual small-shuffle coalescing never happens and every round would
-    otherwise launch ``spark.sql.shuffle.partitions`` tasks regardless of
-    graph size (measured: 64-task rounds on a 97k-edge graph — pure
-    scheduler overhead). Deriving the width restores exactly what AQE
-    would have chosen; at billions of edges the same formula yields
-    thousands of partitions, so the plan scales up unchanged. Every
-    per-round exchange is pinned to this width and key, so the cached
-    edge side and the state side are never re-shuffled inside the loop.
-
-    ``checkpoint_every`` sets the truncation CADENCE for the local /
-    reliable modes: truncate after every Nth round (the final round
-    always truncates), letting N rounds compose lazily between cuts —
-    fewer materialization writes at the price of an N-round-deep plan
-    per cut. Measured at sf0.1 / 6 rounds / local[32] (SCALE.md r12):
-    cadence 2 is within noise of cadence 1 — the per-round state is one
-    slim row per vertex, so the checkpoint write is not the cost;
-    cadence stays 1 by default (shallowest plans, cheapest recovery
-    unit, and at 10⁹ vertices the write is still rank-vector sized,
-    far below one round's edge-join shuffle).
+    The loop's shuffle width is derived from the edge count — ~2M edges
+    per partition, floor 1, no upper cap — because checkpoint truncation
+    blinds AQE: each round starts from a ``Scan ExistingRDD`` whose
+    partitioning Catalyst can't see, so the usual small-shuffle
+    coalescing never happens and every round would otherwise launch
+    ``spark.sql.shuffle.partitions`` tasks regardless of graph size.
+    Every per-round exchange is pinned to this width and key, so the
+    cached edge side and the state side are never re-shuffled inside the
+    loop.
 
     r13 (VERDICT r12 ask #3): the contribution step picks its join
     strategy from the MEASURED vertex count — the one statistic
-    checkpoint truncation hides from Catalyst (``n_nodes`` is already
-    computed for the 1/n seed, so the choice costs nothing):
+    checkpoint truncation hides from Catalyst:
 
     - ``n_nodes <= broadcast_max_nodes`` (default 2M — a rank row is a
       key + a double, so ~100 MB framed; far under the 8 GB broadcast
@@ -418,49 +430,27 @@ def pagerank(
       BROADCASTS the slim (node, rank) vector instead of shuffling it —
       the contribution join, the per-``dst`` aggregate, AND the state
       join all ride the one cached dst-partitioning, so a round's only
-      exchange is the vertex-sized broadcast itself (guide §3.1: the
-      small side of an iterative join is the rank vector by
-      construction; Catalyst can never pick this because the
-      checkpointed side scans back as an ExistingRDD without stats).
-    - larger graphs: the r12 shuffle shape, except the per-``dst``
-      aggregate now PARTIAL-aggregates map-side before its exchange
-      (guide §2.3 "aggregate before you shuffle") instead of
-      repartitioning the edge-grain join output — the exchange carries
-      per-(task × dst) partial sums (vertex-bounded) rather than one
-      row per edge, the difference between shuffling ~|E| and ~|V| rows
-      per round at 100 TB. The rank vector is projected to (node, rank)
-      before its exchange (§2.3 "project before the exchange").
+      exchange is the vertex-sized broadcast itself (guide §3.1).
+    - larger graphs: the edge cache keys on ``src``, the rank vector is
+      projected to (node, rank) and re-pinned to it, and the per-``dst``
+      aggregate PARTIAL-aggregates map-side before its exchange (guide
+      §2.3) — the exchange carries ~|V| partial sums per round, not one
+      row per edge.
 
     Float note: either path changes only the ADDITION ORDER of each
-    dst's contribution sum (partial agg / broadcast-probe order vs the
-    r12 complete-mode order); the recurrence itself is unchanged and
-    the final ``round(round_dp)`` absorbs the last-ulp tail exactly as
-    it already absorbed partition-order variation (oracle-hash-verified
-    at 3 SFs, r13).
+    dst's contribution sum; the recurrence itself is unchanged and the
+    final ``round(round_dp)`` absorbs the last-ulp tail (oracle-hash-
+    verified at 3 SFs).
     """
-    if checkpoint_every < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
-    if lineage not in ("local", "reliable", "persist"):
-        raise ValueError(f"lineage must be local|reliable|persist, got {lineage!r}")
-    spark = edges.sparkSession
-    if lineage == "reliable" and spark.sparkContext.getCheckpointDir() is None:
-        raise ValueError(
-            "lineage='reliable' needs spark.sparkContext.setCheckpointDir "
-            "(an HDFS/object-store path on a cluster) before calling pagerank"
-        )
     e = edges.select(
         F.col(src).alias("src"),
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("w"),
     ).cache()  # read 4x below (out_w, ew, nodes x2) — evaluate the
     # upstream edge derivation once, not per consumer
-    # loop shuffle width: derived from edge count unless pinned (see
-    # docstring); the count doubles as the cache warm-up
-    if partitions is None:
-        n_edges = e.count()
-        partitions = max(1, -(-n_edges // 2_000_000))
+    # loop shuffle width (see docstring); the count doubles as the cache
+    # warm-up
+    partitions = max(1, -(-e.count() // 2_000_000))
     # normalize ONCE: p = w / wout folds the out-weight join out of the
     # loop (the cache key — src for the shuffle path, dst for the
     # broadcast path — is chosen below once n_nodes is known; ew is lazy
@@ -469,9 +459,9 @@ def pagerank(
     ew0 = e.join(out_w, "src").select(
         "src", "dst", (F.col("w") / F.col("wout")).alias("p")
     )
-    # state = (node, dangling): rank-independent, computed once — the
-    # dangling flag replaces the r6 per-round left_anti join; partitioned
-    # on node at the loop width so the per-round left join never moves it
+    # state = (node, dangling): rank-independent, computed once;
+    # partitioned on node at the loop width so the per-round left join
+    # never moves it
     nodes = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
@@ -483,11 +473,11 @@ def pagerank(
         .repartition(partitions, "node")
         .cache()
     )
-    n_nodes = state.count()  # scalar cardinality — model-sized driver read
-    # join-strategy decision from the measured vertex count (docstring
-    # r13 note): small rank vectors broadcast, so the edge cache keys on
-    # dst and a round needs no shuffle at all; big graphs keep the
-    # src-keyed cache + shuffle shape with map-side partial aggregation
+    # the two scalars the loop needs, read in one job
+    n_nodes, n_dangling = state.agg(
+        F.count(F.lit(1)), F.count_if("dangling")
+    ).first()
+    # join strategy from the measured vertex count (docstring r13 note)
     broadcast_ranks = n_nodes <= broadcast_max_nodes
     ew = ew0.repartition(
         partitions, "dst" if broadcast_ranks else "src"
@@ -501,66 +491,45 @@ def pagerank(
         state.unpersist()
         return state.select("node", F.lit(0.0).alias("rank"))
 
-    ranks = state.withColumn("rank", F.lit(1.0 / n_nodes))
-    for it in range(iters):
-        dangling = ranks.filter("dangling").agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm")
-        )
+    def step(ranks: DataFrame, dm: float) -> DataFrame:
         # slim rank vector for the contribution join: the dangling flag
-        # never crosses this exchange/broadcast (guide §2.3 "project
-        # before the exchange")
+        # never crosses this exchange/broadcast (guide §2.3)
         rv = ranks.select("node", "rank")
         if broadcast_ranks:
-            # vertex count measured small: broadcast the rank vector so
-            # the round's join + per-dst aggregate + state join all ride
-            # ew's cached hash(dst, width) — zero shuffles per round
             contrib = (
                 ew.join(F.broadcast(rv), ew.src == rv.node)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("p")).alias("m"))
             )
         else:
-            # the checkpointed ranks frame scans back as an ExistingRDD
-            # with unknown partitioning — re-pin it to (node, width) so
-            # the join reuses ew's cached hash(src, width) layout; the
-            # per-dst aggregate then partial-aggregates map-side and its
-            # exchange carries vertex-bounded partial sums, re-pinned to
-            # (dst, width) so the state join below stays exchange-free
+            # the checkpointed ranks scan back with unknown partitioning:
+            # re-pin them to (node, width) so the join reuses ew's cached
+            # hash(src, width) layout, and re-pin the partial sums to
+            # (dst, width) so the state join stays exchange-free
             contrib = (
                 ew.join(rv.repartition(partitions, "node"), ew.src == rv.node)
                 .groupBy("dst")
                 .agg(F.sum(F.col("rank") * F.col("p")).alias("m"))
                 .repartition(partitions, "dst")
             )
-        ranks = (
-            state.join(contrib, state.node == contrib.dst, "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                "dangling",
-                (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + damping
-                    * (F.coalesce("m", F.lit(0.0)) + F.col("dm") / n_nodes)
-                ).alias("rank"),
-            )
+        return state.join(contrib, state.node == contrib.dst, "left").select(
+            "node",
+            "dangling",
+            (
+                F.lit((1.0 - damping) / n_nodes)
+                + damping * (F.coalesce("m", F.lit(0.0)) + F.lit(dm) / n_nodes)
+            ).alias("rank"),
         )
-        # truncate (or persist) the lineage per the chosen durability
-        # mode; local/reliable honor the cadence (final round always cuts)
-        due = (it + 1) % checkpoint_every == 0 or it == iters - 1
-        if lineage == "local":
-            if due:
-                ranks = ranks.localCheckpoint(eager=True)
-        elif lineage == "reliable":
-            if due:
-                ranks = ranks.checkpoint(eager=True)
-        else:
-            ranks = ranks.persist()
-    if lineage != "persist":
-        # final state is eagerly materialized — the loop-invariant caches
-        # are dead weight from here (repeated invocations would otherwise
-        # pile ew/state copies into the block manager)
-        e.unpersist()
-        ew.unpersist()
-        state.unpersist()
+
+    ranks = fixpoint(
+        state.withColumn("rank", F.lit(1.0 / n_nodes)),
+        step,
+        iters,
+        F.coalesce(F.sum(F.when(F.col("dangling"), F.col("rank"))), F.lit(0.0)),
+        signal=n_dangling / n_nodes,
+        name="pagerank",
+    )[0]
+    e.unpersist()
+    ew.unpersist()
+    state.unpersist()
     return ranks.select("node", F.round("rank", round_dp).alias("rank"))

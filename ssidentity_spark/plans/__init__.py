@@ -131,8 +131,14 @@ DRIVER_WINDOW: tuple[str, ...] = (
     "ref_companion_clusters",
     "sim_ivf_topk",
     "sim_ivf_topk_distributed",
-    "sim_ivfpq_rerank_topk",
-    "sim_ivfpq_topk",
+    # freshness-guard re-queues (tools/driver_history.py --stale): the
+    # fixpoint-loop rewrite of operators/graph.py reaches these two
+    # PARKED consumers through label_propagation and
+    # connected_components_star. Each displaces one r13-green sim_* slot
+    # (freshest evidence in the window; similarity stays covered by its
+    # bench headliners) -> rotation queue tail:
+    "graph_label_propagation",  # displaced sim_ivfpq_rerank_topk
+    "pipe_split_leakage_eval",  # displaced sim_ivfpq_topk
     # late-r12 first-timer: BFS hop distance (G6) — displaced
     # dedup_simhash_pairs (r10-green, least stale of this block) to
     # the r13 queue head
@@ -216,7 +222,8 @@ DRIVER_WINDOW: tuple[str, ...] = (
 # j5_asof_payload, mm_frame_sample, ...), oldest-first, with the
 # per-module coverage rule outranking strict age as usual, and any
 # entry tools/driver_history.py --stale flags jumping the queue
-# (its standing evidence is void).
+# (its standing evidence is void). Queue tail: sim_ivfpq_rerank_topk and
+# sim_ivfpq_topk, displaced by the fixpoint-rewrite re-queues above.
 # Queries hash-verified green by the driver in at least one prior round
 # (union of CORRECTNESS_r01..r09.json rows with hash_match=true). A query
 # may be parked past the window ONLY if it appears here — its green row is

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ssidentity_spark.io import load_table
-from ssidentity_spark.operators.graph import pagerank
+from ssidentity_spark.operators.graph import fixpoint, pagerank
 from ssidentity_spark.registry import register
 
 _DAMPING = 0.85
@@ -788,31 +788,29 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_vec = em.count()
     width = max(1, (n_vec * _KCORE_KNN) // 2_000_000)
     sym = _mutual_knn_edges(em).repartition(width, "u").cache()
-    alive = sym.select("u").distinct()
-    for _ in range(_KCORE_ROUNDS):
-        deg = (
+
+    def step(deg: DataFrame, _) -> DataFrame:
+        # one peel: degrees within the set that survived the last peel
+        alive = deg.filter(F.col("c") >= _KCORE_K).select("u")
+        return (
             sym.join(alive, "u", "left_semi")
             .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
             .groupBy("u")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        alive = deg.filter(F.col("c") >= _KCORE_K).select("u")
-        alive = alive.localCheckpoint(eager=True)
-    # materialize the surviving edge set BEFORE unpersisting sym (r11
-    # advice: an eager unpersist here made the returned lazy frame
-    # recompute the full O(n²) kNN build at action time — the cache only
-    # ever benefited the peel rounds). The eager checkpoint is small
-    # (core edges only) and truncates the sym lineage for good.
-    core_edges = (
-        sym.join(alive, "u", "left_semi")
-        .join(alive.select(F.col("u").alias("v")), "v", "left_semi")
-        .localCheckpoint(eager=True)
-    )
+
+    # every vertex starts alive; the step after the last peel counts each
+    # survivor's within-core degree, so the returned frame reads only the
+    # final checkpoint and the edge cache can go
+    deg = fixpoint(
+        sym.select("u").distinct().withColumn("c", F.lit(_KCORE_K)),
+        step,
+        _KCORE_ROUNDS + 1,
+        name="graph_kcore",
+    )[0]
     sym.unpersist()
-    return (
-        core_edges.groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-        .select(F.col("u").alias("vec_id"), "core_degree")
+    return deg.select(
+        F.col("u").alias("vec_id"), F.col("c").cast("long").alias("core_degree")
     )
 
 
@@ -990,7 +988,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: the mutual edge build is graph_kcore's (exact brute
     tier at gate scale; ivf_knn_edges is the 100 TB candidate path,
-    same trade as G3/G4), checkpointed once and read by every round.
+    same trade as G3/G4), cached once and read by every round.
     Each round is ONE keyed join of the edge list against the current
     FRONTIER (which only ever holds newly-reached vertices — frontier
     size is bounded by the reached set, and at 100 TB by the degree
@@ -1001,29 +999,38 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier algebra are all integer-exact; the only floats anywhere
     are the 6-dp kNN ranks inside the shared edge derivation."""
     em = load_table(spark, sf_dir, "embeddings")
-    sym = _mutual_knn_edges(em).localCheckpoint(eager=True)
+    sym = _mutual_knn_edges(em).cache()
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
     seed = (
         deg.orderBy(F.desc("c"), F.asc("u"))
         .limit(1)
-        .select(F.col("u").alias("node"))
+        .select(F.col("u").alias("node"), F.lit(0).alias("hops"))
     )
-    assigned = seed.withColumn("hops", F.lit(0))
-    frontier = seed
-    for r in range(1, _BFS_ROUNDS + 1):
+
+    def step(assigned: DataFrame, reached: int | None) -> DataFrame | None:
+        # the frontier is last round's newly reached vertices (all at the
+        # same hop count), flagged fresh on the assigned set itself
+        if reached == 0:
+            return None
+        frontier = assigned.filter("fresh")
         nxt = (
             sym.join(frontier, sym.u == frontier.node)
-            .select(F.col("v").alias("node"))
+            .select(F.col("v").alias("node"), (F.col("hops") + 1).alias("hops"))
             .distinct()
             .join(assigned.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        assigned = assigned.unionByName(
-            nxt.withColumn("hops", F.lit(r))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
+        return assigned.select(
+            "node", "hops", F.lit(False).alias("fresh")
+        ).unionByName(nxt.withColumn("fresh", F.lit(True)))
+
+    assigned = fixpoint(
+        seed.withColumn("fresh", F.lit(True)),
+        step,
+        _BFS_ROUNDS,
+        F.count_if("fresh"),
+        name="graph_bfs_hops",
+    )[0]
+    sym.unpersist()
     return assigned.select(
         F.col("node").alias("vec_id"), F.col("hops").cast("long")
     )

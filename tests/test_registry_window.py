@@ -243,3 +243,40 @@ def test_closure_hash_sees_shared_helper_edits():
 
     assert blob_for(helper_v1) != blob_for(helper_v2)
     assert blob_for(helper_v1) == blob_for(helper_v1)
+
+
+def test_plan_hash_does_not_depend_on_the_checkout_root(tmp_path):
+    """Snapshot-backed oracles embed the absolute ``.fixture_snapshots``
+    path; the freshness hash tokenizes the checkout root, so a copy of
+    the tree elsewhere hashes such a query exactly as this one does."""
+    import shutil
+    import subprocess
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    import driver_history as dh
+
+    name = "ref_trilateration"
+    assert dh._REPO_ROOT in REGISTRY[name].oracle
+    copy = tmp_path / "elsewhere"
+    shutil.copytree(
+        os.path.join(dh._REPO_ROOT, "ssidentity_spark"),
+        copy / "ssidentity_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    (copy / "tools").mkdir()
+    shutil.copy(dh.__file__, copy / "tools")
+    probe = (
+        "import sys; sys.path.insert(0, 'tools'); import driver_history as dh; "
+        "from ssidentity_spark.registry import REGISTRY; "
+        f"h = dh.plan_hash({name!r}); "
+        f"print(dh._REPO_ROOT in REGISTRY[{name!r}].oracle, h)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=copy,
+        env={**os.environ, "PYTHONPATH": str(copy)},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout.split()
+    assert out == ["True", dh.plan_hash(name)]

@@ -213,6 +213,14 @@ def _closure_parts(obj, names: set[str], parts: dict[str, str], seen: set) -> No
                     )
                     if " at 0x" not in r and _REPO_ROOT not in r:
                         parts[f"{obj.__name__}.{nm}"] = r
+
+
+# stands in for the checkout root in oracle SQL: snapshot-backed oracles
+# embed absolute ``.fixture_snapshots`` paths, and the hash must not
+# depend on where the tree is checked out
+_ROOT_TOKEN = "<checkout>"
+
+
 def plan_hash(name: str) -> str:
     """Content hash of a registered query's plan-function source + oracle
     SQL + the transitive source closure of every package-local helper it
@@ -227,8 +235,9 @@ def plan_hash(name: str) -> str:
     blob = "\n--part--\n".join(
         f"{label}\n{src}" for label, src in sorted(parts.items())
     )
+    oracle = (spec.oracle or "").replace(_REPO_ROOT, _ROOT_TOKEN)
     return hashlib.sha256(
-        (blob + "\n--oracle--\n" + (spec.oracle or "")).encode()
+        (blob + "\n--oracle--\n" + oracle).encode()
     ).hexdigest()
 
 

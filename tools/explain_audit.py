@@ -58,61 +58,43 @@ def summary_flags(plan: str) -> str:
     return ", ".join(flags) or "narrow"
 
 
-def _pagerank_round(spark, sf_dir):
-    from ssidentity_spark.io import load_table
-    from ssidentity_spark.operators.graph import pagerank
-    from ssidentity_spark.plans.graph import _DAMPING, _EDGES_SQL
-
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    # lineage='persist' keeps the round lazy — the exact loop body, visible
-    return pagerank(spark.sql(_EDGES_SQL), iters=1, damping=_DAMPING, lineage="persist")
-
-
-def _cc_round(spark, sf_dir):
-    from ssidentity_spark.io import load_table
-    from ssidentity_spark.operators.graph import connected_components_star
-    from ssidentity_spark.plans.dedup import _spark_lsh_pairs
-
-    pairs = _spark_lsh_pairs(load_table(spark, sf_dir, "documents"))
-    return connected_components_star(
-        pairs, src="doc_a", dst="doc_b", max_iter=1, truncate=False
-    )
+# VERDICT r6 watch item 2: explain() on a checkpoint-truncated iterative
+# operator sees only the post-checkpoint `Scan ExistingRDD`, so the
+# summary table read "narrow" for exactly the queries whose per-round
+# shuffle structure most needs auditing. Each hook here records ONE
+# representative round of the same loop body untruncated (graph loops:
+# the fixpoint's first step; BPE: the distributed pair-count that is the
+# round's whole cost — the merge apply is a narrow map) so PLANS.md
+# records the real join/agg/shuffle shape per iteration.
+class _Step(Exception):
+    """Carries the first step of a fixpoint loop out of its operator."""
 
 
-def _lpa_round(spark, sf_dir):
-    # one representative LPA round, truncation off, INCLUDING the kNN
-    # edge build (the measured-quadratic surface the summary must show
-    # next to the round's two keyed exchanges — tools/lpa_blowup.py)
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+def _first_step(name):
+    """Round-plan hook for a query whose work is a fixpoint loop: run
+    the query up to the loop and return the loop's first step, lazy —
+    the per-round join/agg/shuffle shape that explain() cannot see
+    behind a round's checkpoint."""
 
-    from ssidentity_spark.io import load_table
-    from ssidentity_spark.operators.graph import label_propagation
-    from ssidentity_spark.plans.graph import _LPA_KNN
-    from ssidentity_spark.plans.similarity import _dot, _norm_vec
+    def build(spark, sf_dir):
+        from unittest import mock
 
-    corpus = _norm_vec(load_table(spark, sf_dir, "embeddings"))
-    nbrs = corpus.select(
-        F.col("vec_id").alias("nbr"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cnrm"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cos"), F.asc("nbr"))
-    knn = (
-        corpus.join(F.broadcast(nbrs), F.col("vec_id") != F.col("nbr"))
-        .select(
-            "vec_id",
-            "nbr",
-            F.round(
-                _dot(F.col("v"), F.col("cv")) / (F.col("nrm") * F.col("cnrm")),
-                6,
-            ).alias("cos"),
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _LPA_KNN)
-        .select("vec_id", "nbr", F.lit(1).alias("w"))
-    )
-    return label_propagation(knn, src="vec_id", dst="nbr", iters=1, truncate=False)
+        from ssidentity_spark.operators import graph as ops
+        from ssidentity_spark.plans import graph as graph_plans
+
+        def capture(state, step, max_rounds, observe=None, signal=None, name=""):
+            raise _Step(step(state, signal))
+
+        with mock.patch.object(ops, "fixpoint", capture), mock.patch.object(
+            graph_plans, "fixpoint", capture
+        ):
+            try:
+                REGISTRY[name].fn(spark, sf_dir)
+            except _Step as s:
+                return s.args[0]
+        raise RuntimeError(f"{name} never reached a fixpoint loop")
+
+    return build
 
 
 def _mmr_round(spark, sf_dir):
@@ -138,38 +120,6 @@ def _bpe_round(spark, sf_dir):
     )
 
 
-# VERDICT r6 watch item 2: explain() on a checkpoint-truncated iterative
-# operator sees only the post-checkpoint `Scan ExistingRDD`, so the
-# summary table read "narrow" for exactly the queries whose per-round
-# shuffle structure most needs auditing. Each builder here reconstructs
-# ONE representative round of the same loop body with truncation disabled
-# (pagerank: lineage='persist'; CC: truncate=False; BPE: the distributed
-# pair-count that is the round's whole cost — the merge apply is a narrow
-# map) so PLANS.md records the real join/agg/shuffle shape per iteration.
-def _bfs_round(spark, sf_dir):
-    # graph_bfs_hops' summary row is the post-checkpoint assigned frame
-    # ("narrow"); this records the edge build + ONE frontier-expansion
-    # round (edge join + distinct + anti-join) untruncated
-    from pyspark.sql import functions as F
-
-    from ssidentity_spark.io import load_table
-    from ssidentity_spark.plans.graph import _mutual_knn_edges
-
-    sym = _mutual_knn_edges(load_table(spark, sf_dir, "embeddings"))
-    deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("c"))
-    seed = (
-        deg.orderBy(F.desc("c"), F.asc("u"))
-        .limit(1)
-        .select(F.col("u").alias("node"))
-    )
-    return (
-        sym.join(seed, sym.u == seed.node)
-        .select(F.col("v").alias("node"))
-        .distinct()
-        .join(seed, "node", "left_anti")
-    )
-
-
 def _fusion_scored_stage(spark, sf_dir):
     # pipe_quality_fusion's summary row shows only the post-checkpoint
     # fused-rank assigner; this records the full upstream stage (signal
@@ -180,13 +130,14 @@ def _fusion_scored_stage(spark, sf_dir):
 
 
 ROUND_PLANS = {
-    "graph_pagerank": _pagerank_round,
-    "dedup_cc_clusters": _cc_round,
+    "graph_pagerank": _first_step("graph_pagerank"),
+    "dedup_cc_clusters": _first_step("dedup_cc_clusters"),
     "text_bpe_train": _bpe_round,
-    "graph_label_propagation": _lpa_round,
+    "graph_label_propagation": _first_step("graph_label_propagation"),
     "sim_mmr_diversify": _mmr_round,
     "pipe_quality_fusion": _fusion_scored_stage,
-    "graph_bfs_hops": _bfs_round,
+    "graph_bfs_hops": _first_step("graph_bfs_hops"),
+    "graph_kcore": _first_step("graph_kcore"),
 }
 
 
@@ -232,14 +183,14 @@ def main() -> None:
         "The summary rows above show these queries' POST-checkpoint plans",
         "(`Scan ExistingRDD`) — the checkpoint that truncates lineage also",
         "blinds explain(). Each plan below is ONE representative round of",
-        "the same loop body with truncation disabled, so the per-iteration",
+        "the same loop body before its checkpoint, so the per-iteration",
         "join/agg/shuffle structure is on record. NOTE: the printed plan",
         "(and its shuffle count) includes the one-time prologue — edge",
         "derivation / normalization subtrees shown inline under their",
         "InMemoryTableScan definitions — which is cached and NOT re-run",
         "per round; the marginal per-round cost is the part above the",
-        "InMemory/checkpoint leaves (for pagerank: one src-keyed join, one",
-        "dst agg, one state join + 1-row broadcast).",
+        "InMemory/checkpoint leaves (for pagerank: one join against the",
+        "broadcast rank vector, one dst agg, one state join).",
         "",
     ]
     for name, builder in sorted(ROUND_PLANS.items()):
